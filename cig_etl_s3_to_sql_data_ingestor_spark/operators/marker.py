@@ -7,14 +7,30 @@ backup_date, inserted_date. Logical dedup key is the TRIPLE
 deliberately NOT part of it (`CustomMarkerTable.py:35-38,53-57`): a
 same-named file re-delivered on a later date counts as already ingested.
 
-Two operations, both DataFrame-shaped:
+Operations, all DataFrame-shaped:
 - ``select_work``: anti-join the candidate work-list against the ledger
   (J4). The ledger is tiny relative to the corpus → broadcast.
-- ``touch``: upsert completed work into the ledger. With a parquet
-  backend the upsert is implemented as (existing ∪ new).dropDuplicates
-  over the key — atomic-rename rewrite of a small table; with a JDBC
-  backend it would be MERGE. On Delta/Iceberg this becomes a real MERGE
-  INTO; the protocol is identical.
+- ``exists``: LIMIT-1 probe for one triple.
+- ``touch``: record completed work, one row per triple (the latest
+  ``backup_date`` of the call), every row stamped with the call's
+  ``inserted_date``. The parquet backend APPENDS those rows as one new
+  part file: it never reads, rewrites or deletes a file already in the
+  ledger, so its cost is the group's rows, not the history's, and a
+  crash can lose at most the touch in flight (Spark's commit protocol
+  publishes the part file whole or not at all). The JDBC backend MERGEs.
+- ``read``: the ledger with one row per triple. On the parquet backend a
+  triple touched again has several rows; the one with the latest
+  ``inserted_date`` wins, and on equal ``inserted_date`` the later
+  ``backup_date`` wins (rows tied on both are equal in every column, so
+  the result is deterministic). ``select_work`` and ``exists`` skip that
+  resolution: duplicates change neither an anti-join nor an existence
+  probe.
+
+Every touch adds one small file. ``cig-etl-optimize <marker_path>``
+folds them (it keeps every row, so ``read`` is unchanged); run it while
+no ingest is touching the ledger, because its rename swap would drop a
+part file appended mid-rewrite. On Delta/Iceberg the append is a real
+transactional INSERT; the protocol is identical.
 """
 
 from __future__ import annotations
@@ -38,19 +54,26 @@ MARKER_SCHEMA = T.StructType(
 
 class MarkerLedger:
     """Shared marker protocol: exists / select_work / touch over any
-    storage backend (subclasses provide ``read``/``_write``)."""
+    storage backend (subclasses provide ``read`` and ``_commit``, and
+    may provide the cheaper unresolved ``_rows``)."""
 
     spark: SparkSession
 
     def read(self) -> DataFrame:  # pragma: no cover - abstract
+        """The ledger, one row per triple."""
         raise NotImplementedError
 
-    def _write(self, merged: DataFrame) -> None:  # pragma: no cover - abstract
+    def _rows(self) -> DataFrame:
+        """Ledger rows that may repeat a triple: enough for key probes."""
+        return self.read()
+
+    def _commit(self, rows: DataFrame) -> None:  # pragma: no cover - abstract
+        """Persist ``rows`` (MARKER_SCHEMA, one per triple)."""
         raise NotImplementedError
 
     def exists(self, parquet_source: str, environment: str, target_table: str) -> bool:
         """LIMIT-1 existence probe (`CustomMarkerTable.py:47-59`)."""
-        m = self.read()
+        m = self._rows()
         return not m.filter(
             (F.col("parquet_source") == parquet_source)
             & (F.col("environment") == environment)
@@ -61,7 +84,7 @@ class MarkerLedger:
         """J4: keep only files not yet recorded under the triple key.
 
         ``files`` must carry file_name, environment, target_table."""
-        marker = self.read().select(
+        marker = self._rows().select(
             F.col("parquet_source").alias("file_name"),
             "environment",
             "target_table",
@@ -71,37 +94,34 @@ class MarkerLedger:
         )
 
     def touch(self, completed: DataFrame) -> None:
-        """Upsert completed rows (keyed on the triple; latest wins)."""
-        new = completed.select(
-            F.col("file_name").alias("parquet_source"),
-            F.col("target_table"),
-            F.col("environment"),
-            F.col("backup_date").cast("date"),
-            F.current_timestamp().alias("inserted_date"),
+        """Record completed work (file_name, environment, target_table,
+        backup_date): one row per triple, the latest backup_date of the
+        call, stamped with this call's inserted_date."""
+        rows = (
+            # One task and no shuffle: ``completed`` is one group's files,
+            # and a single partition already satisfies the grouping.
+            completed.coalesce(1)
+            .groupBy(
+                F.col("file_name").alias("parquet_source"), "target_table", "environment"
+            )
+            .agg(F.max(F.col("backup_date").cast("date")).alias("backup_date"))
+            .withColumn("inserted_date", F.current_timestamp())
         )
-        merged = (
-            new.unionByName(self.read())
-            # dropDuplicates keeps the first occurrence -> new rows win,
-            # mirroring the reference's insert-or-update (:26-44).
-            .dropDuplicates(MARKER_KEY)
-            .localCheckpoint()  # cut lineage before overwriting the source
-        )
-        self._write(merged)
+        self._commit(rows)
 
 
 class ParquetMarkerLedger(MarkerLedger):
-    """Marker table persisted as a small parquet directory."""
+    """Marker table persisted as an append-only parquet directory."""
 
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark
         self.path = path
 
-    def read(self) -> DataFrame:
+    def _rows(self) -> DataFrame:
         # Only "the ledger does not exist yet" maps to an empty frame. A
-        # blanket except here would be a data-loss bug: touch() merges
-        # read() with the new rows and OVERWRITES the ledger, so treating
-        # a transient/corrupt read as empty would silently truncate the
-        # ingestion history (and re-ingest everything later).
+        # blanket except here would be a duplicate-ingest bug: treating a
+        # transient/corrupt read as empty would make select_work hand
+        # back every file of the ingestion history for re-ingest.
         from pyspark.errors import AnalysisException
 
         try:
@@ -111,8 +131,23 @@ class ParquetMarkerLedger(MarkerLedger):
                 return self.spark.createDataFrame([], MARKER_SCHEMA)
             raise
 
-    def _write(self, merged: DataFrame) -> None:
-        merged.coalesce(1).write.mode("overwrite").parquet(self.path)
+    def read(self) -> DataFrame:
+        latest = F.max(F.struct("inserted_date", "backup_date")).alias("_latest")
+        return (
+            self._rows()
+            .groupBy("parquet_source", "target_table", "environment")
+            .agg(latest)
+            .select(
+                "parquet_source",
+                "target_table",
+                "environment",
+                "_latest.backup_date",
+                "_latest.inserted_date",
+            )
+        )
+
+    def _commit(self, rows: DataFrame) -> None:
+        rows.write.mode("append").parquet(self.path)
 
 
 class JdbcMarkerLedger(MarkerLedger):
@@ -122,12 +157,12 @@ class JdbcMarkerLedger(MarkerLedger):
     that.
 
     ``touch`` is a real MERGE upsert (stage the new rows, one
-    transactional ``MERGE INTO`` keyed on the triple): unlike the
-    parquet backend's read-merge-overwrite, concurrent writers ingesting
-    different file sets serialize on row locks and BOTH sets survive —
-    a truncate-rewrite would let the last writer erase the other's rows.
-    Derby (>= 10.11), SQL Server, and Postgres (15+) all speak this
-    MERGE dialect.
+    transactional ``MERGE INTO`` keyed on the triple), so the table
+    keeps one row per triple and ``read`` needs no resolution.
+    Concurrent writers ingesting different file sets serialize on row
+    locks and BOTH sets survive — a truncate-rewrite would let the last
+    writer erase the other's rows. Derby (>= 10.11), SQL Server, and
+    Postgres (15+) all speak this MERGE dialect.
     """
 
     def __init__(self, spark: SparkSession, url: str, table: str = "etl_marker"):
@@ -139,7 +174,8 @@ class JdbcMarkerLedger(MarkerLedger):
         from ..sources.jdbc import _TABLE_MISSING_STATES, _sqlstate, read_query
 
         # Same contract as the parquet backend: only "table absent" is
-        # empty; any other failure propagates so touch() cannot truncate.
+        # empty; any other failure propagates, so select_work cannot hand
+        # back the ingestion history for re-ingest.
         try:
             df = read_query(self.spark, self.url, f"SELECT * FROM {self.table}")
         except Exception as ex:
@@ -163,15 +199,6 @@ class JdbcMarkerLedger(MarkerLedger):
         "environment VARCHAR(128)"
     )
 
-    def _write(self, merged: DataFrame) -> None:  # pragma: no cover - unused
-        # Kept for the abstract contract; touch() below upserts via MERGE
-        # and never rewrites the whole table.
-        merged.coalesce(1).write.mode("overwrite").format("jdbc").option(
-            "url", self.url
-        ).option("dbtable", self.table).option("truncate", "true").option(
-            "createTableColumnTypes", self.COLUMN_TYPES
-        ).save()
-
     def _ensure_table(self) -> None:
         from ..sources.jdbc import _TABLE_MISSING_STATES, _sqlstate, read_query
 
@@ -190,25 +217,13 @@ class JdbcMarkerLedger(MarkerLedger):
             "dbtable", self.table
         ).option("createTableColumnTypes", self.COLUMN_TYPES).save()
 
-    def touch(self, completed: DataFrame) -> None:
+    def _commit(self, rows: DataFrame) -> None:
         """Upsert via staged MERGE — safe under concurrent writers."""
         import uuid
 
-        new = (
-            completed.select(
-                F.col("file_name").alias("parquet_source"),
-                F.col("target_table"),
-                F.col("environment"),
-                F.col("backup_date").cast("date"),
-                F.current_timestamp().alias("inserted_date"),
-            )
-            # MERGE requires a unique source per target row; latest wins
-            # within the batch like the base protocol.
-            .dropDuplicates(MARKER_KEY)
-        )
         self._ensure_table()
         staging = f"{self.table}_stg_{uuid.uuid4().hex[:8]}"
-        new.coalesce(1).write.mode("overwrite").format("jdbc").option(
+        rows.coalesce(1).write.mode("overwrite").format("jdbc").option(
             "url", self.url
         ).option("dbtable", staging).option(
             "createTableColumnTypes", self.COLUMN_TYPES

@@ -18,17 +18,18 @@ Deliberate reference quirks are reproduced and unit-tested (FIXTURES.md F7):
 
 Scale notes: every step is a projection — zero shuffles for the whole
 pipeline; a 100 TB ingest is scan -> map -> sink. T7/T8 are the only
-two-pass steps (a column-stat aggregate gates a rewrite); the gate is one
-tiny extra job whose result is folded into the plan as a literal, exactly
-like the reference's pandas pre-scan, and both passes still read the
-pruned column set only.
+two-pass steps (a column-stat aggregate gates a rewrite). ``clean_pipeline``
+computes both gates in one shared gate job, whose results fold into the
+plan as literals exactly like the reference's pandas pre-scan, then
+applies T1-T11 + P1 as a single projection; the gate scan reads only the
+gated columns.
 """
 
 from __future__ import annotations
 
 from datetime import date
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..catalog import TableSpec
@@ -97,17 +98,136 @@ def materialize_null(col: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
+# Steps over column expressions
+#
+# Each step maps the current column expressions (name -> Column, in frame
+# order) to the updates it makes. ``clean_pipeline`` threads one mapping
+# through every step and projects once; the frame-level functions below
+# apply a single step to a DataFrame. Either way each step is written once.
+# ---------------------------------------------------------------------------
+
+Cols = dict[str, Column]
+
+
+def _columns(df: DataFrame) -> Cols:
+    return {c: F.col(c) for c in df.columns}
+
+
+def _string_columns(df: DataFrame) -> set[str]:
+    return {f_.name for f_ in df.schema.fields if f_.dataType.simpleString() == "string"}
+
+
+def _apply(df: DataFrame, updates: Cols) -> DataFrame:
+    return df.withColumns(updates) if updates else df
+
+
+def _audit(environment: str, ingestion_date: date) -> Cols:  # T1-T3
+    return {
+        "Environment": F.lit(derive_environment_value(environment)),
+        "CIGCopyTime": F.lit(ingestion_date.strftime("%Y-%m-%d")),
+        "CIGProcessed": F.lit("0"),
+    }
+
+
+def _sentinels(cols: Cols, strings: set[str]) -> Cols:  # T4
+    return {c: sentinel_replace(e) for c, e in cols.items() if c in strings}
+
+
+def _missing(cols: Cols, table: TableSpec) -> Cols:  # T5
+    return {c: F.lit("None") for c in table.column_names if c not in cols}
+
+
+def _nullable_ints(cols: Cols, table: TableSpec) -> list[str]:
+    return [c.name for c in table.columns_of_type("int", nullable=True) if c.name in cols]
+
+
+def _decimal_suffix(cols: Cols, table: TableSpec) -> Cols:  # T6
+    return {c: strip_decimal_suffix(cols[c]) for c in _nullable_ints(cols, table)}
+
+
+def _sci_gate(cols: Cols, table: TableSpec) -> Cols:  # T7 gate values
+    return {
+        c: cols[c].contains("e-") | cols[c].contains("e+")
+        for c in _nullable_ints(cols, table)
+    }
+
+
+def _sci_rewrite(cols: Cols, hits: dict) -> Cols:  # T7
+    return {c: normalize_int_string(cols[c]) for c, hit in hits.items() if hit}
+
+
+def _scrub(cols: Cols, table: TableSpec) -> Cols:  # T9
+    return {
+        c.name: not_nullable_scrub(cols.get(c.name, F.lit("")))
+        for c in table.columns
+        if not c.nullable
+    }
+
+
+def _length_gate(cols: Cols, names: list[str]) -> Cols:  # T8 gate values
+    return {c: F.length(cols[c]) for c in names if c in cols}
+
+
+def _truncate(cols: Cols, maxlens: dict, out_suffix: str = "") -> Cols:  # T8
+    return {
+        c + out_suffix: (
+            F.substring(cols[c], 1, TIMESTAMP_MAX_LEN)
+            if (n or 0) > TIMESTAMP_MAX_LEN
+            else cols[c]
+        )
+        for c, n in maxlens.items()
+    }
+
+
+def _nvarchar(cols: Cols, table: TableSpec) -> Cols:  # T10
+    return {
+        c.name: truncate_nvarchar(cols[c.name])
+        for c in table.columns
+        if c.ctype == "str" and c.length is None and c.name in cols
+    }
+
+
+ODD_COLUMNS = {"Geolocation": "POINT (0 0)", "Logo": "None", "Picture": "None"}
+
+
+def _odd(cols: Cols) -> Cols:  # T11
+    return {c: F.lit(v) for c, v in ODD_COLUMNS.items() if c in cols}
+
+
+def _gate(df: DataFrame, *values: Cols) -> list[dict]:
+    """Column-wide ``max`` of every gate value expression over ``df``,
+    computed in ONE Spark job; one result dict per ``values`` mapping.
+
+    The aggregate is an observation on a no-op write, merged from
+    per-task partials: no shuffle, so one job, where ``df.agg`` costs a
+    shuffle-map job plus a result job. The scan reads only the columns
+    the gate expressions name."""
+    flat = [(i, c, v) for i, vs in enumerate(values) for c, v in vs.items()]
+    out: list[dict] = [{} for _ in values]
+    if not flat:
+        return out
+    obs = Observation()
+    (
+        df.select(*[v.alias(f"g{k}") for k, (_, _, v) in enumerate(flat)])
+        .observe(obs, *[F.max(f"g{k}").alias(f"g{k}") for k in range(len(flat))])
+        .write.format("noop")
+        .mode("overwrite")
+        .save()
+    )
+    got = obs.get
+    for k, (i, c, _) in enumerate(flat):
+        out[i][c] = got[f"g{k}"]
+    return out
+
+
+# ---------------------------------------------------------------------------
 # Frame-level steps
 # ---------------------------------------------------------------------------
 
 
 def add_audit_columns(df: DataFrame, environment: str, ingestion_date: date) -> DataFrame:
     """T1+T2+T3: Environment / CIGCopyTime / CIGProcessed constants."""
-    return (
-        df.withColumn("Environment", F.lit(derive_environment_value(environment)))
-        .withColumn("CIGCopyTime", F.lit(ingestion_date.strftime("%Y-%m-%d")))
-        .withColumn("CIGProcessed", F.lit("0"))
-    )
+    return df.withColumns(_audit(environment, ingestion_date))
 
 
 def replace_sentinels(df: DataFrame) -> DataFrame:
@@ -118,82 +238,48 @@ def replace_sentinels(df: DataFrame) -> DataFrame:
     427 stacked projections of 427 fields is quadratic in width — the
     difference between milliseconds and minutes of planning on the
     DivisionStatistics-shaped tables."""
-    updates = {
-        f_.name: sentinel_replace(F.col(f_.name))
-        for f_ in df.schema.fields
-        if f_.dataType.simpleString() == "string"
-    }
-    return df.withColumns(updates) if updates else df
+    return _apply(df, _sentinels(_columns(df), _string_columns(df)))
 
 
 def default_missing_columns(df: DataFrame, table: TableSpec) -> DataFrame:
     """T5: reflected target columns absent from the frame appear as 'None'."""
-    missing = [c for c in table.column_names if c not in df.columns]
-    return df.withColumns({c: F.lit("None") for c in missing}) if missing else df
+    return _apply(df, _missing(_columns(df), table))
 
 
 def normalize_nullable_ints(df: DataFrame, table: TableSpec) -> DataFrame:
     """T6 for every nullable int column."""
-    cols = [c.name for c in table.columns_of_type("int", nullable=True) if c.name in df.columns]
-    return df.withColumns({c: strip_decimal_suffix(F.col(c)) for c in cols}) if cols else df
+    return _apply(df, _decimal_suffix(_columns(df), table))
 
 
 def normalize_sci_notation(df: DataFrame, table: TableSpec) -> DataFrame:
     """T7: gated per column on 'any value contains e-/e+' (A4), then the
     whole column is passed through float parsing.
 
-    The gate is computed in ONE aggregate job over all candidate columns
-    (the reference does a pandas pre-scan per column); the rewrite itself
-    is `normalize_int_string` — see its docstring for the documented
+    The gate is computed in ONE job over all candidate columns (the
+    reference does a pandas pre-scan per column); the rewrite itself is
+    `normalize_int_string` — see its docstring for the documented
     deviation from Python float repr.
     """
-    cols = [c.name for c in table.columns_of_type("int", nullable=True) if c.name in df.columns]
-    if not cols:
-        return df
-    gates = df.agg(
-        *[
-            F.max(
-                F.col(c).contains("e-") | F.col(c).contains("e+")
-            ).alias(c)
-            for c in cols
-        ]
-    ).first()
-    hit = [c for c in cols if gates[c]]
-    return df.withColumns({c: normalize_int_string(F.col(c)) for c in hit}) if hit else df
+    cols = _columns(df)
+    (hits,) = _gate(df, _sci_gate(cols, table))
+    return _apply(df, _sci_rewrite(cols, hits))
 
 
 def scrub_not_nullable(df: DataFrame, table: TableSpec) -> DataFrame:
-    """T9 for every non-nullable target column (creates missing ones as '').
-
-    Single ``withColumns`` projection — see replace_sentinels for why a
-    withColumn loop is quadratic in table width."""
-    cols = [c.name for c in table.columns if not c.nullable]
-    updates = {
-        c: not_nullable_scrub(F.col(c) if c in df.columns else F.lit(""))
-        for c in cols
-    }
-    return df.withColumns(updates) if updates else df
+    """T9 for every non-nullable target column (creates missing ones as '')."""
+    return _apply(df, _scrub(_columns(df), table))
 
 
 def truncate_long_timestamps(
     df: DataFrame, cols: list[str], out_suffix: str = ""
 ) -> DataFrame:
     """T8: per column, truncate to 23 chars iff the column-wide max string
-    length exceeds 23. One aggregate job computes every gate at once; its
-    result folds into the projection as constants (no unpartitioned window
-    at scale)."""
-    present = [c for c in cols if c in df.columns]
-    if not present:
-        return df
-    gates = df.agg(
-        *[F.max(F.length(F.col(c))).alias(c) for c in present]
-    ).first()
-    updates = {}
-    for c in present:
-        maxlen = gates[c] or 0
-        val = F.substring(F.col(c), 1, TIMESTAMP_MAX_LEN) if maxlen > TIMESTAMP_MAX_LEN else F.col(c)
-        updates[c + out_suffix] = val
-    return df.withColumns(updates)
+    length exceeds 23. One job computes every gate at once; its result
+    folds into the projection as constants (no unpartitioned window at
+    scale)."""
+    exprs = _columns(df)
+    (maxlens,) = _gate(df, _length_gate(exprs, cols))
+    return _apply(df, _truncate(exprs, maxlens, out_suffix))
 
 
 def truncate_timestamps_for_table(df: DataFrame, table: TableSpec) -> DataFrame:
@@ -202,21 +288,12 @@ def truncate_timestamps_for_table(df: DataFrame, table: TableSpec) -> DataFrame:
 
 def truncate_nvarchar_max(df: DataFrame, table: TableSpec) -> DataFrame:
     """T10 for str columns with no declared length."""
-    cols = [
-        c.name
-        for c in table.columns
-        if c.ctype == "str" and c.length is None and c.name in df.columns
-    ]
-    return df.withColumns({c: truncate_nvarchar(F.col(c)) for c in cols}) if cols else df
-
-
-ODD_COLUMNS = {"Geolocation": "POINT (0 0)", "Logo": "None", "Picture": "None"}
+    return _apply(df, _nvarchar(_columns(df), table))
 
 
 def neutralize_odd_columns(df: DataFrame) -> DataFrame:
     """T11: geography/binary columns pinned to constants (reference :120-128)."""
-    updates = {c: F.lit(v) for c, v in ODD_COLUMNS.items() if c in df.columns}
-    return df.withColumns(updates) if updates else df
+    return _apply(df, _odd(_columns(df)))
 
 
 def ordered_projection(df: DataFrame, table: TableSpec) -> DataFrame:
@@ -237,16 +314,27 @@ def materialize_nulls(df: DataFrame) -> DataFrame:
 def clean_pipeline(
     df: DataFrame, table: TableSpec, environment: str, ingestion_date: date
 ) -> DataFrame:
-    """The full reference pipeline in the reference's call order
-    (`CigEolHostingIngestionLogic.py:32-41`), ending with the ordered
-    projection (P1). T12 is applied separately by the sink."""
-    df = add_audit_columns(df, environment, ingestion_date)  # T1-T3
-    df = replace_sentinels(df)  # T4
-    df = default_missing_columns(df, table)  # T5
-    df = normalize_nullable_ints(df, table)  # T6
-    df = normalize_sci_notation(df, table)  # T7
-    df = scrub_not_nullable(df, table)  # T9
-    df = truncate_timestamps_for_table(df, table)  # T8
-    df = truncate_nvarchar_max(df, table)  # T10
-    df = neutralize_odd_columns(df)  # T11
-    return ordered_projection(df, table)  # P1
+    """T1-T11 and the ordered projection (P1) as ONE projection over
+    ``df``, with both column gates (T7, T8) computed in one job. T12 is
+    applied separately by the sink.
+
+    Every step updates the column expressions in the reference's call
+    order (`CigEolHostingIngestionLogic.py:32-41`) but one: T9 is
+    composed before T7's rewrite, so both gates can be read at once.
+    That changes no value. T7 rewrites only nullable int columns and T9
+    only not-nullable ones, so neither step reads the other's output;
+    the T7 gate reads the T6 values and the T8 gate the T9-scrubbed
+    values, exactly as in the reference order."""
+    audit = _audit(environment, ingestion_date)
+    cols = {**_columns(df), **audit}  # T1-T3
+    cols.update(_sentinels(cols, _string_columns(df) | audit.keys()))  # T4
+    cols.update(_missing(cols, table))  # T5
+    cols.update(_decimal_suffix(cols, table))  # T6
+    cols.update(_scrub(cols, table))  # T9
+    datetimes = [c.name for c in table.columns_of_type("datetime")]
+    hits, maxlens = _gate(df, _sci_gate(cols, table), _length_gate(cols, datetimes))
+    cols.update(_sci_rewrite(cols, hits))  # T7
+    cols.update(_truncate(cols, maxlens))  # T8
+    cols.update(_nvarchar(cols, table))  # T10
+    cols.update(_odd(cols))  # T11
+    return df.select(*[cols[c].alias(c) for c in table.column_names])  # P1

@@ -1,9 +1,16 @@
 """End-to-end batch ingest: the Spark-native equivalent of the
 reference's `main.py` lifecycle (SURVEY.md §3.1).
 
-    discover (S2/S3) → work-list plan (P2-P6, J4) → per-group:
-    read parquet (S1) → stringify → clean T1-T11 + P1 → T12 →
-    sink (parquet or JDBC) → marker touch
+    discover (S2/S3) → work-list plan (P2-P6, J4, frozen once per run)
+    → per (environment, data_source, entity, target) group:
+        read the group's day directories (S1), semi-joined to the
+        group's work-list files → stringify → clean T1-T11 + P1 (one
+        gate job, then one projection) → T12 → sink (parquet or JDBC)
+        → marker touch (appends the group's files to the ledger)
+
+A group's files are marked only after its sink write returns, and only
+that group's files: a run that dies mid-way leaves the later groups
+unmarked, so the next run ingests them.
 
 Differences from the reference, by design:
 - one Spark job per (environment, entity) group instead of one OS
@@ -11,7 +18,7 @@ Differences from the reference, by design:
   workers, and small files coalesce into sane partitions automatically;
 - the transform is a column-expression pipeline (whole-stage codegen),
   not per-cell pandas lambdas;
-- idempotency = marker anti-join before the read + marker upsert after
+- idempotency = marker anti-join before the read + marker append after
   the sink commit (the reference's exists()/touch() protocol).
 """
 
@@ -102,7 +109,7 @@ class BatchIngest:
             source_col="environment" if self.layout == "hosting" else "data_source",
         )
         # Freeze the work-list before any marker mutation: the anti-join
-        # reads the ledger, which ledger.touch() rewrites inside the loop.
+        # reads the ledger, which ledger.touch() appends to inside the loop.
         wl = wl.cache()
         wl.count()
         by_source = {t.target_name: t for t in self.catalog.values()}
@@ -128,13 +135,16 @@ class BatchIngest:
                 g.min_date,
                 g.max_date,
             )
-            survivors = (
-                wl.filter(
-                    (F.col("environment") == env)
-                    & (F.col("data_source") == data_source)
-                    & (F.col("target_table") == target)
-                )
-                .select(norm_path(F.col("full_path")).alias("_wl_path"))
+            # The group's work-list files, on the full group key: two
+            # mailbox data sources can derive the same environment.
+            in_group = wl.filter(
+                (F.col("environment") == env)
+                & (F.col("data_source") == data_source)
+                & (F.col("entity_name") == g.entity_name)
+                & (F.col("target_table") == target)
+            )
+            survivors = in_group.select(
+                norm_path(F.col("full_path")).alias("_wl_path")
             )
             df = (
                 self.spark.read.parquet(*day_dirs)
@@ -166,13 +176,9 @@ class BatchIngest:
                 # across every historical run.
                 n_rows = final.count()
                 final.write.mode("append").parquet(out_path)
-            completed = (
-                wl.filter(
-                    (F.col("environment") == env) & (F.col("target_table") == target)
-                )
-                .select("file_name", "environment", "target_table", "backup_date")
+            ledger.touch(
+                in_group.select("file_name", "environment", "target_table", "backup_date")
             )
-            ledger.touch(completed)
             self.results.append(
                 IngestResult(env, target, g.n_files, n_rows, out_path)
             )

@@ -36,6 +36,12 @@ def get_spark(
       shift values.
     - Arrow enabled: every pandas interchange (createDataFrame/toPandas/
       pandas UDFs) goes through Arrow batches, not pickled rows.
+    - ``spark.python.sql.dataFrameDebugging.enabled=false``: PySpark 4
+      otherwise walks the Python stack and makes about five extra py4j
+      round trips on EVERY Column operation, to name the call site in
+      error messages. The ingest builds thousands of column expressions
+      per run (tables of up to 427 columns), where that capture alone
+      cost about 16% of a nightly ingest run (4-vCPU VM, local[2]).
     """
     cpus = default_parallelism()
     builder = (
@@ -47,6 +53,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.ansi.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

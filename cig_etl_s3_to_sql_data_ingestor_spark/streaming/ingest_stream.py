@@ -5,9 +5,10 @@ The file source's checkpoint natively tracks processed files
 (exactly-once input accounting, replacing `CustomMarkerTable.exists`),
 ``trigger(availableNow=True)`` turns each scheduled run into a bounded
 micro-batch drain (the daily-cron analog), and ``foreachBatch`` gives a
-transactional hook where the batch is cleaned, written, and the marker
-ledger upserted — keeping the SQL-side audit trail the reference exposes
-to operators.
+transactional hook where the batch is cleaned, written, and its files
+appended to the marker ledger — keeping the SQL-side audit trail the
+reference exposes to operators. A replayed epoch appends its files
+again; the ledger's read resolves the repeated triples (latest wins).
 
 Exactly-once OUTPUT requires the batch hook itself to be idempotent in
 ``epoch_id`` (a driver can die after publishing but before the

@@ -105,6 +105,175 @@ def test_batch_ingest_prunes_and_is_idempotent(spark, tree, tmp_path):
     assert spark.read.parquet(r.sink_path).count() == 3
 
 
+def _completed(spark, rows):
+    return spark.createDataFrame(
+        rows,
+        "file_name string, environment string, target_table string, backup_date date",
+    )
+
+
+def _part_files(path):
+    """name -> (size, mtime) of every data file in a parquet directory."""
+    return {
+        e.name: (e.stat().st_size, e.stat().st_mtime_ns)
+        for e in os.scandir(path)
+        if e.is_file() and not e.name.startswith(("_", "."))
+    }
+
+
+def test_parquet_marker_ledger(spark, tmp_path):
+    """Mirror of the JDBC ledger test: one row per triple after a
+    re-touch, the latest touch winning on backup_date."""
+    from cig_etl_s3_to_sql_data_ingestor_spark.operators.marker import MARKER_SCHEMA
+
+    ledger = ParquetMarkerLedger(spark, str(tmp_path / "marker"))
+    assert ledger.read().count() == 0
+    assert not ledger.exists("f1.parquet", "NL", "T1")
+
+    ledger.touch(_completed(spark, [("f1.parquet", "NL", "T1", dt.date(2024, 1, 5))]))
+    assert ledger.exists("f1.parquet", "NL", "T1")
+    assert not ledger.exists("f1.parquet", "DE", "T1")
+
+    # Re-touch same key + one new (f2 twice in one call: the later
+    # backup_date is the one recorded).
+    ledger.touch(_completed(spark, [
+        ("f1.parquet", "NL", "T1", dt.date(2024, 1, 6)),
+        ("f2.parquet", "NL", "T1", dt.date(2024, 1, 4)),
+        ("f2.parquet", "NL", "T1", dt.date(2024, 1, 6)),
+    ]))
+    m = ledger.read()
+    assert m.columns == MARKER_SCHEMA.names
+    got = {r["parquet_source"]: str(r["backup_date"]) for r in m.collect()}
+    assert got == {"f1.parquet": "2024-01-06", "f2.parquet": "2024-01-06"}
+
+    # J4 work selection: only unseen files survive.
+    files = spark.createDataFrame(
+        [("f1.parquet", "NL", "T1"), ("f3.parquet", "NL", "T1")],
+        "file_name string, environment string, target_table string",
+    )
+    assert [r["file_name"] for r in ledger.select_work(files).collect()] == ["f3.parquet"]
+
+    # Tie rule: rows of one triple with the same inserted_date resolve to
+    # the later backup_date.
+    ts = dt.datetime(2030, 1, 1)
+    spark.createDataFrame(
+        [("f3.parquet", "T1", "NL", dt.date(2024, 1, 7), ts),
+         ("f3.parquet", "T1", "NL", dt.date(2024, 1, 9), ts)],
+        MARKER_SCHEMA,
+    ).write.mode("append").parquet(str(tmp_path / "marker"))
+    row = ledger.read().filter(F.col("parquet_source") == "f3.parquet").collect()
+    assert [str(r["backup_date"]) for r in row] == ["2024-01-09"]
+
+    # Compaction (``cig-etl-optimize``) folds the touch files and keeps
+    # the resolved ledger.
+    from cig_etl_s3_to_sql_data_ingestor_spark.operators.maintenance import compact_parquet
+
+    before = {tuple(r) for r in ledger.read().collect()}
+    assert compact_parquet(spark, str(tmp_path / "marker")) == 1
+    assert len(_part_files(str(tmp_path / "marker"))) == 1
+    assert {tuple(r) for r in ledger.read().collect()} == before
+
+
+def test_parquet_marker_touch_only_appends(spark, tmp_path):
+    """touch adds one part file and never rewrites or deletes one."""
+    path = str(tmp_path / "marker")
+    ledger = ParquetMarkerLedger(spark, path)
+    ledger.touch(_completed(spark, [("f1.parquet", "NL", "T1", dt.date(2024, 1, 5))]))
+    before = _part_files(path)
+    ledger.touch(_completed(spark, [
+        ("f1.parquet", "NL", "T1", dt.date(2024, 1, 6)),
+        ("f2.parquet", "NL", "T1", dt.date(2024, 1, 6)),
+    ]))
+    after = _part_files(path)
+    assert {k: after[k] for k in before} == before
+    assert len(after) == len(before) + 1
+
+
+def test_failed_group_leaves_later_groups_unmarked(spark, tmp_path, monkeypatch):
+    """Two mailbox data sources derive the same environment (NL): the
+    first group's touch must not mark the second group's files, so a run
+    that dies in the second group's sink re-ingests them next time."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cig_etl_s3_to_sql_data_ingestor_spark.sources import jdbc
+
+    root = str(tmp_path / "mb")
+    for source, name, ids in (
+        ("NL_Hosting_Mailbox", "h1.parquet", ["h1"]),
+        ("NL_Other_Mailbox", "o1.parquet", ["o1", "o2"]),
+    ):
+        path = os.path.join(root, source, "Widgets", "2024", "01", "05")
+        os.makedirs(path)
+        pq.write_table(pa.table({"ID": ids, "Name": ["n"] * len(ids)}),
+                       os.path.join(path, name))
+
+    written = []
+
+    def flaky_write(df, url, table, **kwargs):
+        if written:
+            raise RuntimeError("sink down")
+        written.append(sorted(r["ID"] for r in df.collect()))
+
+    monkeypatch.setattr(jdbc, "write_table", flaky_write)
+    marker = str(tmp_path / "marker")
+    ingest = BatchIngest(spark, {"Widgets": SPEC}, sink_root=str(tmp_path / "sink"),
+                         marker_path=marker, layout="mailbox",
+                         jdbc_url="jdbc:derby:memory:never-opened")
+    with pytest.raises(RuntimeError, match="sink down"):
+        ingest.run(root, dt.date(2024, 1, 5))
+    assert written == [["h1"]]
+    ledger = ParquetMarkerLedger(spark, marker)
+    assert {r["parquet_source"] for r in ledger.read().collect()} == {"h1.parquet"}
+
+    # The re-run (sink back, here the parquet sink) ingests only the
+    # second group's file.
+    ingest.jdbc_url = None
+    results = ingest.run(root, dt.date(2024, 1, 5))
+    assert [(r.environment, r.n_files, r.n_rows) for r in results] == [("NL", 1, 2)]
+    sunk = spark.read.parquet(results[0].sink_path)
+    assert sorted(r["ID"] for r in sunk.collect()) == ["o1", "o2"]
+    assert {r["parquet_source"] for r in ledger.read().collect()} == {
+        "h1.parquet", "o1.parquet"
+    }
+
+
+def test_batch_ingest_applies_gated_steps(spark, tmp_path):
+    """The T7/T8 gates read the group's semi-joined scan inside
+    BatchIngest and their rewrites reach the sink."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    spec = TableSpec(
+        target_name="HOST_CIG_Orders",
+        source="Orders",
+        columns=(
+            ColumnSpec("ID", "str", True),
+            ColumnSpec("Qty", "int", True),
+            ColumnSpec("Created", "datetime", True),
+        ),
+    )
+    root = str(tmp_path / "data")
+    path = os.path.join(root, "environment=NL", "Orders", "2024", "01", "05")
+    os.makedirs(path)
+    pq.write_table(
+        pa.table({
+            "ID": ["a", "b"],
+            "Qty": ["1.801439850948301e+16", "12.0"],
+            "Created": ["2019-07-03 12:34:56.1234567", "2019-07-03"],
+        }),
+        os.path.join(path, "o1.parquet"),
+    )
+    ingest = BatchIngest(spark, {"Orders": spec}, sink_root=str(tmp_path / "sink"),
+                         marker_path=str(tmp_path / "marker"))
+    results = ingest.run(root, dt.date(2024, 1, 5))
+    got = {tuple(r) for r in spark.read.parquet(results[0].sink_path).collect()}
+    assert got == {
+        ("a", "18014398509483008", "2019-07-03 12:34:56.123"),
+        ("b", "12", "2019-07-03"),
+    }
+
+
 def test_work_groups_are_bounded_descriptors(spark, tree):
     """The driver must never hold per-file path lists: a work group is a
     fixed-size descriptor (counts + date range), and the group's day

@@ -4,6 +4,7 @@ reference's quirks (FIXTURES.md F7, `CigEolHostingIngestionLogic.py`)."""
 from __future__ import annotations
 
 import datetime as dt
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -133,6 +134,100 @@ def test_clean_pipeline_end_to_end(spark):
     final = TR.materialize_nulls(out)
     rabo_final = final.filter(F.col("Bank") == "RABO").first()
     assert rabo_final["ID"] is None and rabo_final["MissingCol"] is None
+
+
+def stepwise_clean(df, table, environment, ingestion_date):
+    """The pipeline as the public steps composed in the reference's call
+    order (`CigEolHostingIngestionLogic.py:32-41`): the reference the
+    fused ``clean_pipeline`` must equal."""
+    df = TR.add_audit_columns(df, environment, ingestion_date)  # T1-T3
+    df = TR.replace_sentinels(df)  # T4
+    df = TR.default_missing_columns(df, table)  # T5
+    df = TR.normalize_nullable_ints(df, table)  # T6
+    df = TR.normalize_sci_notation(df, table)  # T7
+    df = TR.scrub_not_nullable(df, table)  # T9
+    df = TR.truncate_timestamps_for_table(df, table)  # T8
+    df = TR.truncate_nvarchar_max(df, table)  # T10
+    df = TR.neutralize_odd_columns(df)  # T11
+    return TR.ordered_projection(df, table)  # P1
+
+
+def count_jobs(spark, fn):
+    """(fn(), number of Spark jobs fn started)."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def assert_same_frame(got, want):
+    assert got.schema == want.schema
+    assert got.exceptAll(want).isEmpty() and want.exceptAll(got).isEmpty()
+
+
+EVERY_STEP = TableSpec(
+    target_name="HOST_CIG_EveryStep",
+    source="EveryStep",
+    columns=(
+        ColumnSpec("ID", "str", True),
+        ColumnSpec("Name", "str", False),
+        ColumnSpec("Active", "str", True),
+        ColumnSpec("SciHit", "int", True),  # T7 gate fires
+        ColumnSpec("SciMiss", "int", True),  # T7 gate stays off
+        ColumnSpec("Count", "int", False),
+        ColumnSpec("LongTs", "datetime", True),  # T8 over 23 chars
+        ColumnSpec("ShortTs", "datetime", True),  # T8 under 23 chars
+        ColumnSpec("StampNone", "datetime", False),  # 'None' substrings, T9 then T8
+        ColumnSpec("Notes", "str", True, length=None),  # T10
+        ColumnSpec("Geolocation", "str", True),  # T11
+        ColumnSpec("Logo", "str", True),  # T11
+        ColumnSpec("MissingOpt", "str", True),  # T5
+        ColumnSpec("MissingReq", "datetime", False),  # T5 then T9
+        ColumnSpec("Environment", "str", True),
+        ColumnSpec("CIGCopyTime", "str", True),
+        ColumnSpec("CIGProcessed", "str", True),
+    ),
+)
+
+
+def every_step_frame(spark):
+    cols = [
+        "ID", "Name", "Active", "SciHit", "SciMiss", "Count", "LongTs", "ShortTs",
+        "StampNone", "Notes", "Geolocation", "Logo", "Extra",
+    ]
+    rows = [
+        ("id1", "NoneSuch", "True", "1.801439850948301e+16", "12.0", "7.0",
+         "2019-07-03 12:34:56.1234567", "2019-07-03", "2019-07-03 12:34:56.123None",
+         "n" * 100_010, "POINT (1 2)", "0xFF", "dropped"),
+        ("nan", None, "False", "12.0", "1.014.0", None,
+         "2019-07-03 12:34:56", "2019-07-03 12:34", "NoneNone2019-07-03 12:34:56.1",
+         "short", "NaT", None, "x"),
+        ("NaT", "Bank", "x", "None", "abc", "3",
+         None, None, None, "None", "nan", "y", None),
+    ]
+    return spark.createDataFrame(rows, ", ".join(f"{c} string" for c in cols))
+
+
+def test_clean_pipeline_fused_equals_stepwise(spark):
+    df = every_step_frame(spark)
+    args = (EVERY_STEP, "NL_Hosting_Mailbox", dt.date(2024, 1, 5))
+    fused, jobs = count_jobs(spark, lambda: TR.clean_pipeline(df, *args))
+    # Both column gates (T7, T8) share one job; the rest is one projection.
+    assert jobs == 1
+    assert_same_frame(fused, stepwise_clean(df, *args))
+    first, second = (r for r in fused.orderBy("Active").collect() if r["Active"] != "x")
+    assert (second["Active"], first["Active"]) == ("1", "0")  # T4
+    assert second["SciHit"] == "18014398509483008"  # T7 hit
+    assert first["SciMiss"] == "114"  # T7 miss keeps the T6 quirk
+    assert second["LongTs"] == "2019-07-03 12:34:56.123"  # T8 over
+    assert second["ShortTs"] == "2019-07-03"  # T8 under
+    assert second["StampNone"] == "2019-07-03 12:34:56.123"  # T9 then T8
+    assert second["MissingReq"] == "" and second["MissingOpt"] == "None"  # T5, T9
 
 
 def test_t9_not_nullable_created_as_empty(spark):

@@ -90,10 +90,16 @@ def test_wide_table_clean_pipeline_and_jdbc(spark, tmp_path):
 def test_wide_table_plan_stays_single_stage(spark):
     """The clean pipeline at 427 columns must remain a pure projection
     over the scan — no shuffle introduced by width, and a plan that
-    Catalyst can still analyze/optimize in bounded time."""
-    spec = _wide_spec()
-    df = _wide_frame(spark)
-    cleaned = TR.clean_pipeline(stringify(df), spec, "NL", dt.date(2024, 1, 5))
+    Catalyst can still analyze/optimize in bounded time. Building it
+    starts one job (the shared T7/T8 gate), and it equals the public
+    steps composed one by one."""
+    from tests.test_transforms import assert_same_frame, count_jobs, stepwise_clean
+
+    df = stringify(_wide_frame(spark))
+    args = (_wide_spec(), "NL", dt.date(2024, 1, 5))
+    cleaned, jobs = count_jobs(spark, lambda: TR.clean_pipeline(df, *args))
+    assert jobs == 1
+    assert_same_frame(cleaned, stepwise_clean(df, *args))
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     plan = cleaned._jdf.queryExecution().explainString(mode)
     assert "Exchange" not in plan, "width introduced a shuffle"
